@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from spartan2_spark.operators import manifest as M
+from spartan2_spark.operators.barrier import barrier
 
 __all__ = [
     "compact_tier",
@@ -129,12 +130,13 @@ def compaction_plan(
     (part, order) — order-preserving across tasks — local cumsum per
     task, then broadcast per-(task, part) offsets (a window over the
     tiny task-count relation). One range shuffle + one broadcast join.
+    The ranged relation is pinned with ``barrier`` as in
+    ``global_row_numbers`` (both the local cumsum and the offsets read
+    it), so constructing this DataFrame launches a job.
     """
-    from pyspark.sql import Window as W
-
     cols = [F.col(c) for c in (*part_cols, *order_cols)]
-    ranged = df.repartitionByRange(*cols).withColumn(
-        "__pid", F.spark_partition_id()
+    ranged = barrier(
+        df.repartitionByRange(*cols).withColumn("__pid", F.spark_partition_id())
     )
     w_local = W.partitionBy("__pid", *part_cols).orderBy(*order_cols)
     local = ranged.withColumn(

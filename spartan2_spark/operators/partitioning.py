@@ -20,6 +20,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spartan2_spark.operators.barrier import barrier
+
 __all__ = [
     "with_domain",
     "domain_salt_map",
@@ -135,14 +137,22 @@ def global_row_numbers(
     i.e. tens to thousands of rows at any data scale), not over the
     data. WindowExec's "No Partition Defined" warning for it is
     expected and harmless.
-    """
-    from pyspark.sql import Window as W
 
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        if num_partitions
-        else df.repartitionByRange(*order_cols)
-    ).withColumn("__pid", F.spark_partition_id())
+    The ranged relation is pinned with ``barrier`` because both the
+    local numbering and the offsets read it: re-evaluated once per
+    consumer, the sampled range bounds (and so ``__pid``) can differ
+    between the two when the exchange is not reused (AQE off,
+    ``spark.sql.exchange.reuse=false``), and the offsets no longer add
+    up. So constructing this DataFrame launches a job (the range
+    sample plus the pinned shuffle).
+    """
+    ranged = barrier(
+        (
+            df.repartitionByRange(num_partitions, *order_cols)
+            if num_partitions
+            else df.repartitionByRange(*order_cols)
+        ).withColumn("__pid", F.spark_partition_id())
+    )
     local = ranged.withColumn(
         "__local",
         F.row_number().over(W.partitionBy("__pid").orderBy(*order_cols)),

@@ -8,6 +8,13 @@ Layout under ``out_root``:
     canonical/            url -> canonical text + sha256 (latest-wins)
     t1m/ t1h/ t1d/        tier state tables, parquet partitioned by dt
     gapfill_1h/ blocks_1h/  gap-filled view + Gorilla block table
+                            (gapfill_1h is rebalanced on dt before its
+                            write: one file per date up to AQE's
+                            advisory size, not one per task per date
+                            as the url-hashed union gives. Each file
+                            costs a parquet footer and, on a local FS
+                            without libhadoop, a forked chmod per file,
+                            .crc sidecar and directory)
     _manifests/<stage>.json per-partition lineage (rows, value_crc,
                             input_snapshot, input_crc)
     <table>/_VERSION        table snapshot counter (Iceberg-id analogue)
@@ -303,13 +310,26 @@ def run_pipeline(
         # instead of two full shuffles of the tier (at N executors the
         # removed shuffle is cross-JVM serde, the dominant marginal
         # cost of the stage; output bit-identical — commutative aggs)
+        #
+        # then rebalance the dense output on dt: the union of url-hashed
+        # real rows and exploded gap rows puts every date in every task,
+        # so each task would write one file per date (each file costs a
+        # footer and forked chmods, see the module Layout). Rebalancing
+        # lets AQE write one file per date while a date is small and
+        # split a date larger than the advisory size; repartition("dt")
+        # would pin each date to one task however large it is. Rows,
+        # lineage crcs and Gorilla blocks are unchanged.
         view = R.tier_view(df.drop("dt").repartition(F.col("url")), bin_mode=bin_mode)
-        return G.densify_fill(
-            view.select("url", "bucket_ts", "cnt", "vmean"),
-            "1h",
-            ("vmean",),
-            method="interp",
-        ).withColumn("dt", F.to_date("bucket_ts"))
+        return (
+            G.densify_fill(
+                view.select("url", "bucket_ts", "cnt", "vmean"),
+                "1h",
+                ("vmean",),
+                method="interp",
+            )
+            .withColumn("dt", F.to_date("bucket_ts"))
+            .hint("rebalance", "dt")
+        )
 
     gap_man = M.read_manifest(out_root, "gapfill_1h")
     gap_valid = bool(gap_man) and all(e.get("input_crc") == fp for e in gap_man)

@@ -4,6 +4,7 @@ id assigner."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spartan2_spark.datagen import synth_pages
@@ -316,3 +317,62 @@ def test_mix_alpha_weights_temperature_semantics(spark):
 
     with pytest.raises(ValueError):
         mix_alpha_weights(df, "source", alpha=-0.1)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_two_phase_cumsums_match_reference_without_exchange_reuse(spark, aqe):
+    """Both two-phase cumsums (``compaction_plan``'s byte cumsum and
+    ``global_row_numbers``) read one range-partitioned relation from
+    two plan subtrees. Without exchange reuse each subtree would sample
+    its own range bounds from a shuffled (nondeterministically ordered)
+    input; the barrier pins one layout for both, so the result matches
+    the single-window reference on a skewed input."""
+    from pyspark.sql import Window as W
+
+    from spartan2_spark.operators.compaction import compaction_plan
+    from spartan2_spark.operators.partitioning import global_row_numbers
+
+    h = F.xxhash64(F.col("id"))
+    df = (
+        spark.range(200_000)
+        .withColumn("tier", F.when(F.pmod(h, F.lit(10)) < 8, "1m").otherwise("1h"))
+        # skew: a quarter of the rows share one url
+        .withColumn(
+            "url",
+            F.when(F.pmod(h, F.lit(4)) == 0, F.lit("u_head")).otherwise(
+                F.format_string(
+                    "u%05d", F.pmod(F.xxhash64("id", F.lit(1)), F.lit(20_000))
+                )
+            ),
+        )
+        .withColumn("start_ts", F.pmod(F.xxhash64("id", F.lit(2)), F.lit(1 << 30)))
+        .withColumn("bytes", F.pmod(F.xxhash64("id", F.lit(3)), F.lit(1000)) + 1)
+        .repartition(8)
+    )
+    order = ("url", "start_ts", "id")
+    saved = {k: spark.conf.get(k) for k in
+             ("spark.sql.exchange.reuse", "spark.sql.adaptive.enabled")}
+    spark.conf.set("spark.sql.exchange.reuse", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        got = compaction_plan(df, target_bytes=10_000, order_cols=order)
+        w = W.partitionBy("tier").orderBy(*order).rowsBetween(W.unboundedPreceding, 0)
+        ref = (
+            df.withColumn("__c", F.sum("bytes").over(w))
+            .withColumn("grp", F.floor((F.col("__c") - F.col("bytes")) / F.lit(10_000)))
+            .groupBy("tier", "grp")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_blocks"),
+                F.sum("bytes").cast("long").alias("total_bytes"),
+            )
+        )
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+
+        cols = [F.col(c) for c in order]
+        rn = global_row_numbers(df.select(*order), cols, "rn")
+        rn_ref = df.select("id", F.row_number().over(W.orderBy(*cols)).alias("rn_ref"))
+        assert rn.join(rn_ref, "id").filter(F.col("rn") != F.col("rn_ref")).count() == 0
+        assert rn.count() == 200_000
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

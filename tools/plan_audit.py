@@ -8,12 +8,13 @@ plus a summary rollup. Plans are built at a small sf (construction of
 iterative queries runs their real barriered rounds; everything else
 stays lazy), so the audit is cheap and runs per round.
 
-CartesianProduct nodes are classified by SUBTREE (r5): one whose
-inputs never read a data source (no FileScan below — e.g. the
-eaglemine water-LEVEL inequality self-join over a collected <=63-row
-level ladder) is counted as `bounded_cartesians` and does NOT fire
-`summary.with_cartesian_product`; only `risky_cartesians` (a data
-scan somewhere beneath the cartesian) do.
+CartesianProduct nodes are classified by SUBTREE: one whose inputs
+never read data (no FileScan, `Scan ExistingRDD` or `ReusedExchange`
+below) is counted as `bounded_cartesians` and does NOT fire
+`summary.with_cartesian_product`; only `risky_cartesians` do. The
+eaglemine water-LEVEL inequality self-joins over a collected <=63-row
+level ladder read `Scan ExistingRDD` and are allowlisted by query name
+(`LEVEL_LADDER_QUERIES`).
 
 Usage:
 
@@ -43,38 +44,55 @@ def _node_indent(line: str) -> int:
     return len(line) - len(line.lstrip(" :+-"))
 
 
-def bounded_cartesians(plan: str) -> tuple[int, int]:
+# Queries whose cartesians join a level ladder collected to the
+# driver (<= 63 eaglemine water levels, re-created as `Scan
+# ExistingRDD`): bounded by construction at any corpus scale.
+LEVEL_LADDER_QUERIES = frozenset({
+    "eaglemine_anderson",
+    "eaglemine_clusters",
+    "eaglemine_describe",
+    "eaglemine_describe_dtm",
+    "eaglemine_describe_trunc",
+    "eaglemine_stitch",
+})
+
+# Plan nodes that stand for data-sized input: a file scan, a barrier()
+# checkpoint of a relation (`Scan ExistingRDD`), or a reused shuffle
+# shown in place of the scan beneath it.
+_DATA_NODES = ("FileScan", "Scan ExistingRDD", "ReusedExchange")
+
+
+def bounded_cartesians(plan: str, query: str | None = None) -> tuple[int, int]:
     """Classify every CartesianProduct node by its SUBTREE: a cartesian
-    whose inputs never read a data source (no `FileScan parquet` below
-    it — e.g. the eaglemine water-LEVEL inequality self-join, whose
-    children derive from a collected <=63-row level ladder via `Scan
-    ExistingRDD`) is bounded by construction and cannot become
-    data-sized at any corpus scale. Returns (bounded, risky) counts.
+    is risky when any of ``_DATA_NODES`` appears below it, since it can
+    then become data-sized. In ``LEVEL_LADDER_QUERIES`` only a file
+    scan below makes it risky. Returns (bounded, risky) counts.
     """
+    data_nodes = ("FileScan",) if query in LEVEL_LADDER_QUERIES else _DATA_NODES
     lines = plan.splitlines()
     bounded = risky = 0
     for i, line in enumerate(lines):
         if "CartesianProduct" not in line:
             continue
         d = _node_indent(line)
-        has_scan = False
+        reads_data = False
         for sub in lines[i + 1 :]:
             if not sub.strip():
                 continue
             if _node_indent(sub) <= d:
                 break
-            if "FileScan parquet" in sub:
-                has_scan = True
+            if any(n in sub for n in data_nodes):
+                reads_data = True
                 break
-        if has_scan:
+        if reads_data:
             risky += 1
         else:
             bounded += 1
     return bounded, risky
 
 
-def audit_plan(plan: str) -> dict:
-    n_bounded, n_risky = bounded_cartesians(plan)
+def audit_plan(plan: str, query: str | None = None) -> dict:
+    n_bounded, n_risky = bounded_cartesians(plan, query)
     return {
         "bounded_cartesians": n_bounded,
         "risky_cartesians": n_risky,
@@ -127,7 +145,7 @@ def main() -> int:
     for name in names:
         try:
             df = qs[name](spark, sf_dir)
-            out[name] = audit_plan(plan_of(df))
+            out[name] = audit_plan(plan_of(df), name)
         except Exception as e:  # noqa: BLE001 — census must finish
             failures.append(name)
             out[name] = {"error": str(e).split("\n")[0][:200]}
